@@ -98,6 +98,7 @@ def main() -> None:
     out_name = (
         "bench_full.json" if sf_val == 0.01 else f"bench_full_sf{sf}.json"
     )
+    import hashlib
     import platform
 
     with open(os.path.join(here, out_name), "w") as fh:
@@ -116,9 +117,12 @@ def main() -> None:
                 # byte-identical code 5-10x apart across hosts); compare
                 # commits only via min-of-N solo A/B on one quiet host.
                 # The annotation lives here only — the driver-parsed
-                # stdout line below is unchanged.
+                # stdout line below is unchanged. The host name itself
+                # stays out of the tracked file: only a short hash of it.
                 "host": {
-                    "node": platform.node(),
+                    "fingerprint": hashlib.sha256(
+                        platform.node().encode()
+                    ).hexdigest()[:8],
                     "machine": platform.machine(),
                     "os_cpus": os.cpu_count(),
                     "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),

@@ -106,8 +106,10 @@ def current_labels(
     ep = latest_epoch(labels_dir, below)
     if ep is None:
         return None
-    return spark.read.parquet(os.path.join(labels_dir, f"batch={ep}")).select(
-        "node", "label"
+    # merge_pairs_batch writes every snapshot as (node long, label long);
+    # the known schema spares a footer-inference job per read
+    return spark.read.schema("node long, label long").parquet(
+        os.path.join(labels_dir, f"batch={ep}")
     )
 
 
@@ -299,6 +301,9 @@ def merge_pairs_batch(
             pairs = pairs.unionByName(
                 novel_pairs(flush_edges, prior)
             ).dropDuplicates()
+        # the edge set and the touched labels feed both the star
+        # contraction and the untouched carry-forward: compute each once
+        pairs = pairs.localCheckpoint(eager=True)
         ends = (
             pairs.select(F.col("doc_a").alias("node"))
             .unionByName(pairs.select(F.col("doc_b").alias("node")))
@@ -308,6 +313,7 @@ def merge_pairs_batch(
             prior.join(ends, "node", "left_semi")
             .select("label")
             .dropDuplicates()
+            .localCheckpoint(eager=True)
         )
         # star contraction of each touched component: node—label edges are
         # connectivity-exact (label IS a member, the component minimum)

@@ -288,3 +288,53 @@ def test_four_face_composition_ledger_driven_compaction(spark, tmp_path):
         (r.node, r.label) for r in current_labels(spark, labels_dir).collect()
     }
     assert streamed == batch_labels == {(1, 1), (2, 1), (3, 1), (4, 1)}
+
+
+# Spark jobs one steady-state epoch (index_new_batch + merge_pairs_batch)
+# may run. Shingling, MinHash and the novel-pair filter each run once per
+# epoch; a write that re-derives them from the batch adds jobs and trips
+# this budget.
+EPOCH_JOB_BUDGET = 59
+
+
+def _jobs_in_group(spark, group, body) -> int:
+    """Spark jobs ``body`` runs, counted through the status tracker under
+    its own job group."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        body()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_steady_epoch_job_budget(spark, tmp_path):
+    from purldb_spark.streaming.cc_stream import merge_pairs_batch
+    from purldb_spark.streaming.dedup_stream import index_new_batch
+
+    index_dir = str(tmp_path / "index")
+    pairs_dir = str(tmp_path / "pairs")
+    labels_dir = str(tmp_path / "labels")
+    base2 = "pack my box with five dozen liquor jugs before noon strikes"
+    batches = [
+        [(1, BASE), (9, "completely unrelated words about spark engines here")],
+        [(2, BASE.replace("dog", "cat")), (5, base2), (4, BASE)],
+    ]
+    jobs = []
+    for epoch, batch in enumerate(batches):
+        df = spark.createDataFrame(batch, DOC_SCHEMA)
+
+        def body():
+            index_new_batch(spark, df, index_dir, pairs_dir)
+            merge_pairs_batch(
+                spark, spark.read.parquet(pairs_dir), labels_dir, epoch,
+                "new_id", "index_id",
+            )
+
+        jobs.append(_jobs_in_group(spark, f"{tmp_path.name}/{epoch}", body))
+    assert {
+        (r.node, r.label) for r in current_labels(spark, labels_dir).collect()
+    } == {(1, 1), (2, 1), (4, 1)}
+    assert jobs[1] <= EPOCH_JOB_BUDGET, jobs

@@ -186,3 +186,87 @@ def test_null_text_docs_are_inert_not_bogus_dups(spark, tmp_path):
         r.rep_id
         for r in spark.read.parquet(exact_index_path(index_dir)).collect()
     } == {3}
+
+
+def _pairs(spark, pairs_dir):
+    return {
+        (r.new_id, r.index_id)
+        for r in spark.read.parquet(pairs_dir).collect()
+    }
+
+
+def test_near_dups_arriving_in_one_batch_pair(spark, tmp_path):
+    """Two near-duplicates in the same micro-batch pair with each other,
+    on the first epoch (no index yet) and on a later one, oriented
+    new_id = larger id as if the smaller had been indexed first."""
+    index_dir = str(tmp_path / "index")
+    pairs_dir = str(tmp_path / "pairs")
+    T1 = "the quick brown fox jumps over the lazy dog today"
+    T2 = "pack my box with five dozen liquor jugs before noon strikes"
+    U = "completely different words about spark query engines here now"
+
+    b1 = spark.createDataFrame(
+        [(1, T1), (3, T1.replace("dog", "cat")), (5, U)], SCHEMA
+    )
+    index_new_batch(spark, b1, index_dir, pairs_dir)
+    assert _pairs(spark, pairs_dir) == {(3, 1)}
+    assert spark.read.parquet(pairs_dir).first().jaccard >= 0.5
+
+    # a later epoch: the within-batch pair (8, 6) rides next to the
+    # cross-index pair (7, 1)
+    b2 = spark.createDataFrame(
+        [(6, T2), (8, T2.replace("noon", "dusk")), (7, T1.replace("today", "now"))],
+        SCHEMA,
+    )
+    index_new_batch(spark, b2, index_dir, pairs_dir)
+    got = _pairs(spark, pairs_dir)
+    assert {(3, 1), (8, 6), (7, 1)} <= got
+    assert all(n > i for n, i in got if {n, i} <= {1, 3, 6, 8})
+
+    # a replay of the later batch appends nothing
+    n_pairs = spark.read.parquet(pairs_dir).count()
+    index_new_batch(spark, b2, index_dir, pairs_dir)
+    assert spark.read.parquet(pairs_dir).count() == n_pairs
+
+
+def test_crash_between_postings_and_bands_append_heals_on_replay(
+    spark, tmp_path, monkeypatch
+):
+    """A crash in the middle of a batch's index appends must not leave a
+    document banded without shingle postings: the replay guard is keyed
+    on the bands table, so such a document would never get its postings,
+    and no later near-duplicate of it could verify."""
+    import os
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    index_dir = str(tmp_path / "index")
+    pairs_dir = str(tmp_path / "pairs")
+    real_parquet = DataFrameWriter.parquet
+    failed: list[str] = []
+
+    def parquet_failing_once(self, path, *args, **kwargs):
+        if not failed and os.path.basename(path) == "shingles":
+            failed.append(path)
+            raise RuntimeError("simulated crash at the postings append")
+        return real_parquet(self, path, *args, **kwargs)
+
+    # epoch 0 seeds the index; epoch 1 (doc 1) crashes at its postings
+    # append and is replayed; epoch 2 brings doc 1's near-duplicate
+    index_new_batch(
+        spark, spark.createDataFrame([BATCH1[1]], SCHEMA), index_dir, pairs_dir
+    )
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_failing_once)
+    b1 = spark.createDataFrame([BATCH1[0]], SCHEMA)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        index_new_batch(spark, b1, index_dir, pairs_dir)
+    assert failed
+    index_new_batch(spark, b1, index_dir, pairs_dir)  # the replay
+
+    sh = spark.read.parquet(index_dir + "/shingles")
+    assert {r.doc_id for r in sh.select("doc_id").distinct().collect()} == {1, 3}
+    index_new_batch(
+        spark, spark.createDataFrame([BATCH2[0]], SCHEMA), index_dir, pairs_dir
+    )
+    assert _pairs(spark, pairs_dir) == {(2, 1)}
